@@ -1,16 +1,16 @@
 """S4 — connected components via alternating large-star / small-star passes.
 
 Implements the hash-join CC algorithm of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (SoCC'14 — public): each round is two
-DataFrame self-join/groupBy passes; converges in O(log²) rounds (in
-practice a handful — alias-link components are shallow).  This replaces
-GraphFrames (jar not available offline) and the reference's driver-side
-greedy grouping (entity_alias_mapping.ipynb cell-20).
+Components in MapReduce and Beyond" (SoCC'14 — public): each round is a
+large-star pass followed by a small-star pass; converges in O(log²)
+rounds (in practice a handful — alias-link components are shallow).  This
+replaces GraphFrames (jar not available offline) and the reference's
+driver-side greedy grouping (entity_alias_mapping.ipynb cell-20).
 
 Scale notes:
 - every pass is ONE hash exchange on ``a`` + a partition-local window min
   (see the window-form note above the star passes) + a distinct — pure
-  shuffle operators, no driver state;
+  shuffle operators, no driver state, no join;
 - each round is pinned with a lazy persist() and the convergence digest
   materializes it (one pass per round: compute + cache-populate + digest
   in a single job), the previous round unpersisting as the next pins; a
@@ -21,16 +21,12 @@ Scale notes:
   aggregate per round;
 - head-entity skew (a giant component's min attracts everything) is the
   classic large-star skew.  The window form collocates each node's edges
-  in one task (a sort over the hot node's whole neighborhood — fine up to
-  ~10^7-edge components, measured fastest on this box because it is one
-  exchange per pass); for giant-component graphs pass ``skew_salt=S``:
-  the star passes switch to a map-side-combined groupBy(min) + a SALTED
-  min join (mins replicated S ways, edges keyed (a, hash(b)%S)), so a hot
-  node's neighborhood spreads over S tasks and no task sorts it — the
-  price is the (combine-reduced) aggregate exchange per pass.  AQE
-  skew-join does NOT apply to either form (there is no join in the window
-  form and the salted join is already uniform); the final assignment
-  groupBy is per-node partial-aggregated, i.e. skew-safe either way.
+  in one task (a sort over the hot node's whole neighborhood).  On a
+  graph with 10^5-spoke hubs it ran 2.3-7.2x faster than a salted
+  two-level min join (one rotating-order round, BENCH/CC_SALT.md), so the
+  loop has no salted form.  AQE skew-join does not apply (there is no
+  join in the loop); the final assignment groupBy is per-node
+  partial-aggregated, i.e. skew-safe.
 """
 
 from __future__ import annotations
@@ -49,43 +45,15 @@ def _sym(e: DataFrame) -> DataFrame:
 # exchange + partition-local sort.  Per round that removes two full
 # edge-set shuffles (~33% of bytes moved) — the loop is shuffle-bound,
 # so this is the lever that matters at 10^8 edges (measured on a 9M-edge
-# graph: round time 50s → 34s at one 2-core executor).
+# graph: round time 50s → 34s at one 2-core executor).  The loop runs
+# _round_fused; _large_star/_small_star are the unfused reference pair the
+# tests compare it against.
 
-def _attach_min(rows: DataFrame, m_expr, skew_salt: int | None) -> DataFrame:
-    """rows(a, b, ...) + column ``m`` = per-``a`` min (m_expr decides the
-    exact min semantics).  ``skew_salt=None``: window form — one exchange,
-    hot-``a`` neighborhood sorts in one task.  ``skew_salt=S``: two-level
-    form — map-side-combined groupBy(min) (skew-safe by partial
-    aggregation) + a salted join that spreads a hot key over S tasks
-    (mins replicated S ways; the replication is ~|V|·S rows, always at or
-    below one edge-set copy for S <= average degree)."""
-    if skew_salt is None:
-        return rows.withColumn("m", m_expr(F.min("b").over(W.partitionBy("a"))))
-    mins = (rows.groupBy("a").agg(F.min("b").alias("_mn"))
-            .select("a", m_expr(F.col("_mn")).alias("m")))
-    reps = mins.select(
-        "a", "m",
-        F.explode(F.array(*[F.lit(i) for i in range(skew_salt)])).alias("_salt"))
-    keyed = rows.withColumn(
-        "_salt", F.pmod(F.xxhash64("b"), F.lit(skew_salt)).cast("int"))
-    # the replica table is |V|·S rows BY CONSTRUCTION — never broadcast
-    # it.  Its pre-explode shuffle stats look tiny to AQE (the Generate
-    # multiplies rows after the stage whose size AQE measures), so
-    # without the hint AQE converts this join to broadcast and the
-    # driver dies building a |V|·S-row relation (observed: notEnough-
-    # MemoryToBuildAndBroadcastTable at 3.25M nodes × S=4 on a 4g
-    # driver).  SHUFFLE_HASH keeps it a shuffled join with no per-task
-    # sort — per-task build is |V|·S/numPartitions rows, uniform because
-    # the keys are salted; _iso_session additionally pins
-    # autoBroadcastJoinThreshold=-1 (this is the loop's only join).
-    return keyed.join(reps.hint("shuffle_hash"), ["a", "_salt"]).drop("_salt")
-
-
-def _large_star(e: DataFrame, skew_salt: int | None = None) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors of every node to its min neighbor."""
-    starred = _attach_min(_sym(e), lambda mn: F.least(mn, F.col("a")), skew_salt)
+    m = F.least(F.min("b").over(W.partitionBy("a")), F.col("a"))
     return (
-        starred
+        _sym(e).withColumn("m", m)
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -93,10 +61,10 @@ def _large_star(e: DataFrame, skew_salt: int | None = None) -> DataFrame:
     )
 
 
-def _small_star(e: DataFrame, skew_salt: int | None = None) -> DataFrame:
+def _small_star(e: DataFrame) -> DataFrame:
     """Connect smaller-or-equal neighbors of every node to its min neighbor."""
     o = e.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-    om = _attach_min(o, lambda mn: mn, skew_salt)
+    om = o.withColumn("m", F.min("b").over(W.partitionBy("a")))
     # one explode, not a 2-branch union: each union branch would re-run
     # the WindowExec (only exchanges are reused across branches); the
     # (b,m)+(a,m) fan-out per row is a narrow Generate above ONE window
@@ -175,17 +143,11 @@ def _iso_session(parent):
         # multiple times per round, so the TEXT rendering of late-round
         # plans is exponentially larger than the plan DAG itself — AQE
         # stringifies the plan on every update callback and an unbounded
-        # maxPlanStringLength turns that into a driver OOM (observed on
-        # the salted variant: java.lang.OutOfMemoryError inside
-        # QueryExecution.explainString).  1 MB is plenty for debugging.
+        # maxPlanStringLength turns that into a driver OOM (observed on a
+        # since-removed salted form of the loop, whose plans grow faster:
+        # java.lang.OutOfMemoryError inside QueryExecution.explainString).
+        # 1 MB is plenty for debugging.
         iso.conf.set("spark.sql.maxPlanStringLength", str(1 << 20))
-        # the loop's only join is the salted min join in _attach_min,
-        # whose build side is |V|·S rows by construction — disable both
-        # static and AQE broadcast conversion in this session so a stats
-        # misestimate (the replica explode happens AFTER the stage AQE
-        # sizes) can never materialize it on the driver
-        iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        iso.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         _ISO_SESSIONS[parent] = iso
     return iso
 
@@ -219,57 +181,21 @@ def _driver_union_find(e0: DataFrame) -> DataFrame:
 # its predecessor TWICE (via _sym), so persist-only pinning leaves a
 # 2^rounds recompute fan-out back to the parquet hop if a late round loses
 # a cached block — one eager localCheckpoint every N rounds caps the chain
-# at N rounds for ~1 extra pass per N.  The SALTED round embeds its
-# predecessor ~4x per round (_attach_min reads its input on both the
-# aggregate and the probe side, twice per star pass), so its plan grows
-# ~4^rounds between checkpoints — a tighter cadence keeps analyzer time
-# and plan size bounded
+# at N rounds for ~1 extra pass per N
 CHECKPOINT_EVERY = 5
-CHECKPOINT_EVERY_SALTED = 2
-
-# ``skew_salt="auto"`` selection: stay on the window form unless some
-# node's symmetric neighborhood exceeds this many rows.  The constant is a
-# per-task SORT budget, not a speed crossover — BENCH/CC_SALT.md measures
-# the salted form 2.3-2.8x (S=4) to 6.3-7.2x (S=16) SLOWER end-to-end on
-# a graph whose hottest node has 10^5 spokes (well inside one task's
-# sort; the |V|·S min-replica join term dominates when average degree is
-# small, and grows with S exactly as measured), so switching early is
-# a pessimization; what the salt prevents is one task sorting an entire
-# giant-star neighborhood (20M edge rows ≈ 320MB of sort buffer per the
-# loop's 16-byte rows — beyond this, task spill + straggling dominate a
-# round regardless of cluster size).  The probe pays one extra
-# partial-aggregated pass over the edge set — measured end-to-end at
-# +5.9% (N) / +1.9% (4N) on the short-loop CC_SALT graph, an upper
-# bound that longer loops amortize further (BENCH/CC_SALT.md).
-SKEW_AUTO_DEGREE_BUDGET = 20_000_000
-
-
-def _auto_salt(e0: DataFrame, budget: int = SKEW_AUTO_DEGREE_BUDGET) -> int | None:
-    max_deg = (_sym(e0).groupBy("a").count()
-               .agg(F.max("count").alias("m")).collect()[0]["m"]) or 0
-    if max_deg <= budget:
-        return None
-    salt = 2
-    while max_deg // salt > budget and salt < 64:
-        salt *= 2
-    return salt
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
-                         small_graph_threshold: int = SMALL_GRAPH_EDGES,
-                         skew_salt: int | None | str = "auto") -> DataFrame:
+                         small_graph_threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
     """edges(a, b) long ids → assignments(entity_id, canonical_id=component min).
 
     Nodes that appear in no edge are simply absent (callers coalesce to
     self, see link.entity_map_from_edges).  Graphs at or below
     ``small_graph_threshold`` edges short-circuit to a driver union-find
     (identical result, property-tested); pass 0 to force the distributed
-    large-star/small-star loop.  ``skew_salt``: None = window-form star
-    passes (fewest exchanges — measured fastest up to 10^5-spoke hot
-    nodes, BENCH/CC_SALT.md); an int S switches to salted two-level min
-    passes for graphs with giant components (see _attach_min — outputs
-    property-tested identical); ``"auto"`` (default) measures the max
-    symmetric degree once and salts only past SKEW_AUTO_DEGREE_BUDGET.
+    large-star/small-star loop, which runs fused window-form rounds
+    (_round_fused) until the edge set stops changing, failing loudly after
+    ``max_iter`` rounds.
     """
     parent = edges.sparkSession
 
@@ -289,8 +215,6 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     )
     if e0.count() <= small_graph_threshold:
         return _driver_union_find(e0)
-    if skew_salt == "auto":
-        skew_salt = _auto_salt(e0)
     iso = _iso_session(parent)
     # crossing sessions JVM-side via a temp parquet hop: this path only
     # runs ABOVE the small-graph threshold — exactly where a Python
@@ -322,15 +246,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     # session, which sidesteps the rewriteConstraints bug either way.
     e = iso.read.parquet(f"{hop}/edges").persist()
     prev = _digest(e)
-    ckpt_every = CHECKPOINT_EVERY if skew_salt is None else CHECKPOINT_EVERY_SALTED
     for rnd in range(max_iter):
-        # fused 3-exchange round on the default path; the salted skew
-        # variant keeps the explicit pair (its mins travel by join)
-        if skew_salt is None:
-            new = _round_fused(e)
-        else:
-            new = _small_star(_large_star(e, skew_salt), skew_salt)
-        if rnd % ckpt_every == ckpt_every - 1:
+        new = _round_fused(e)
+        if rnd % CHECKPOINT_EVERY == CHECKPOINT_EVERY - 1:
             # eager localCheckpoint: truncates lineage (bounds the
             # recompute chain to CHECKPOINT_EVERY rounds) at the price of
             # one extra pass this round; on a real cluster this is

@@ -44,22 +44,17 @@ def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
 
 def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
                 surface_rows: list[tuple[str, int, str]] | None = None,
-                overlap: bool = True, pin_extracted: bool = True,
-                pin_ordered: str | bool = "checkpoint",
-                cc_threshold: int | None = None) -> dict:
+                overlap: bool = True, cc_threshold: int | None = None) -> dict:
     """S1..S5 in memory; returns dict with ordered/extracted/entity_map/
     triples/nodes/edges DataFrames (edges/triples not yet materialized).
 
-    ``pin_extracted=True`` checkpoints the extraction output so several
-    downstream consumers (triples, nodes, edges, mention views) share one
-    extraction pass.  Pass False when exactly one output will be consumed —
-    extraction then streams straight into materialize with no intermediate
-    store (the single-sink fused plan the bench measures; the turn ts
-    rides along in EXTRACTED, so no consumer joins the corpus back).
-    ``pin_ordered`` is forwarded to order_turns (see its docstring).
-    ``cc_threshold`` overrides the connected-components small-graph
-    short-circuit (pass 0 to force the distributed large-star/small-star
-    loop — the scaling bench uses this to exercise the at-scale CC path).
+    The extraction output is checkpointed so the downstream consumers
+    (triples, nodes, edges, mention views) share one extraction pass.
+    ``overlap`` runs the linking branch on a second driver thread (see the
+    module docstring).  ``cc_threshold`` overrides the connected-components
+    small-graph short-circuit (pass 0 to force the distributed
+    large-star/small-star loop — the scaling bench uses this to exercise
+    the at-scale CC path).
     """
     if surface_rows is None:
         surface_rows = collect_surface_rows(vocab)
@@ -72,19 +67,17 @@ def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
             vocab, connected_components(link_candidate_edges(vocab),
                                         small_graph_threshold=thr))
 
+    def extraction_branch() -> tuple[DataFrame, DataFrame]:
+        ordered = order_turns(transcripts)
+        return ordered, extract(ordered, surface_rows).localCheckpoint(eager=True)
+
     if overlap:
         with ThreadPoolExecutor(max_workers=1) as pool:
             f_emap = pool.submit(linking_branch)
-            ordered = order_turns(transcripts, pin=pin_ordered)
-            extracted = extract(ordered, surface_rows)
-            if pin_extracted:
-                extracted = extracted.localCheckpoint(eager=True)
+            ordered, extracted = extraction_branch()
             emap = f_emap.result()
     else:
-        ordered = order_turns(transcripts, pin=pin_ordered)
-        extracted = extract(ordered, surface_rows)
-        if pin_extracted:
-            extracted = extracted.localCheckpoint(eager=True)
+        ordered, extracted = extraction_branch()
         emap = linking_branch()
 
     raw = raw_triples_view(extracted)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
 from .cc import connected_components
+from .exec import collect_surface_rows
 from .extract import extract, mentions_view, raw_triples_view
 from .link import entity_map_from_edges, link_candidate_edges
 from .materialize import materialize, unmatched_surfaces
@@ -44,24 +45,14 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
             raise InjectedFailure(f"injected failure after committing stage {name!r}")
         return io.read(spark, name), manifest["snapshot_id"]
 
-    def _surface_rows() -> list[tuple[str, int, str]]:
-        # collected lazily: only the extract stage consumes the surface
-        # rows, and a fully-committed resume must not pay a
-        # vocabulary-sized driver collect for data it never uses
-        if surface_rows is not None:
-            return surface_rows
-        return [
-            (r["surface"], int(r["entity_id"]), r["entity_type"])
-            for r in vocab.selectExpr(
-                "entity_id", "entity_type",
-                "explode(concat(array(canonical_name), aliases)) as surface",
-            ).collect()
-        ]
-
     ordered, snap1 = stage("ordered", input_fingerprint, lambda: order_turns(transcripts))
+    # surface rows are collected inside the stage's compute: only extract
+    # consumes them, and a fully-committed resume must not pay a
+    # vocabulary-sized driver collect for data it never uses
     extracted, snap2 = stage(
         "extracted", f"{input_fingerprint}/{snap1}",
-        lambda: extract(ordered, _surface_rows())
+        lambda: extract(ordered, surface_rows if surface_rows is not None
+                        else collect_surface_rows(vocab))
     )
     emap, snap3 = stage(
         "entity_map", input_fingerprint,

@@ -4,9 +4,12 @@
 - mention-set equality
 - distinct-triple precision/recall >= 0.95 (observed: 1.0)
 - entity_map / nodes exact equality
+- the in-memory build_graph path: edges + entity_map exact equality with
+  both CC forms (driver union-find and the distributed loop)
 """
 
 import pandas as pd
+import pytest
 
 
 def _pdf(df, keys):
@@ -73,3 +76,21 @@ def test_metrics_lineage_rows(small_run):
     assert set(m["stage"].unique()) >= {"ordered", "extracted", "entity_map", "triples", "nodes", "edges"}
     assert (m["output_rows"] >= 0).all()
     assert m["snapshot_id"].notna().all()
+
+
+@pytest.mark.parametrize("cc_threshold", [None, 0], ids=["union_find", "distributed_cc"])
+def test_build_graph_matches_oracle(spark, small_spark_inputs, small_vocab, small_oracle,
+                                    cc_threshold):
+    from kgp.pipeline.exec import build_graph
+    from kgp.synth import vocab_surface_rows
+
+    t, v = small_spark_inputs
+    g = build_graph(spark, t, v, vocab_surface_rows(small_vocab), cc_threshold=cc_threshold)
+    keys = ["conv_id", "src", "dst", "pred", "ts"]
+    sp = _pdf(g["edges"], keys)[keys]
+    op = small_oracle["edges"][keys].sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(sp, op)
+    keys = ["surface", "entity_id"]
+    sp = _pdf(g["entity_map"], keys)
+    op = small_oracle["entity_map"].sort_values(keys).reset_index(drop=True)[sp.columns.tolist()]
+    pd.testing.assert_frame_equal(sp, op)
