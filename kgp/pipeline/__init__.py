@@ -9,12 +9,12 @@ S5 materialize  canonical triples + partitioned nodes/edges tables
 
 from .order import order_turns
 from .extract import extract
-from .link import link_candidate_edges, entity_map_from_edges
+from .link import link_candidate_edges, entity_map_from_edges, link_entities
 from .cc import connected_components
 from .materialize import materialize
 from .run import run_pipeline
 
 __all__ = [
     "order_turns", "extract", "link_candidate_edges", "entity_map_from_edges",
-    "connected_components", "materialize", "run_pipeline",
+    "link_entities", "connected_components", "materialize", "run_pipeline",
 ]

@@ -26,9 +26,9 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .cc import connected_components
+from .cc import SMALL_GRAPH_EDGES
 from .extract import extract, raw_triples_view
-from .link import entity_map_from_edges, link_candidate_edges
+from .link import link_entities
 from .materialize import materialize
 from .order import order_turns
 
@@ -60,12 +60,8 @@ def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
         surface_rows = collect_surface_rows(vocab)
 
     def linking_branch() -> DataFrame:
-        from .cc import SMALL_GRAPH_EDGES
-
         thr = SMALL_GRAPH_EDGES if cc_threshold is None else cc_threshold
-        return entity_map_from_edges(
-            vocab, connected_components(link_candidate_edges(vocab),
-                                        small_graph_threshold=thr))
+        return link_entities(vocab, small_graph_threshold=thr)
 
     def extraction_branch() -> tuple[DataFrame, DataFrame]:
         ordered = order_turns(transcripts)

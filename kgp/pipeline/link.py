@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import linkspec
 from ..ops.common import explode_once
+from .cc import SMALL_GRAPH_EDGES, connected_components
 from ..textops import normalize_surface
 
 
@@ -117,3 +118,12 @@ def entity_map_from_edges(vocab: DataFrame, assignments: DataFrame) -> DataFrame
         .select("surface", "entity_id", "canonical_id")
         .dropDuplicates(["surface", "entity_id"])
     )
+
+
+def link_entities(vocab: DataFrame,
+                  small_graph_threshold: int = SMALL_GRAPH_EDGES) -> DataFrame:
+    """S3→S4: entity_map(surface, entity_id, canonical_id) from the link
+    candidate edges' connected components (the Spark twin of
+    oracle.link_entities)."""
+    return entity_map_from_edges(vocab, connected_components(
+        link_candidate_edges(vocab), small_graph_threshold=small_graph_threshold))

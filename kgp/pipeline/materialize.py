@@ -58,36 +58,38 @@ def unmatched_surfaces(raw_triples: DataFrame, entity_map: DataFrame) -> DataFra
     )
 
 
-def materialize(raw_triples: DataFrame, ordered: DataFrame, entity_map: DataFrame,
-                vocab: DataFrame, salt_buckets: int = 16):
-    smap = surface_map_df(entity_map)
-    t = _resolve(raw_triples, smap, "subj")
-    t = _resolve(t, smap, "obj")
-    triples = t.select("subj", "pred", "obj", "conv_id", "turn_idx")
-
+def canonical_nodes(vocab: DataFrame, entity_map: DataFrame) -> DataFrame:
+    """nodes(canonical_id, name, entity_type): one row per canonical entity
+    (vocab ⋈ canon WHERE entity_id = canonical_id)."""
     canon = entity_map.select("entity_id", "canonical_id").distinct()
-    nodes = (
+    return (
         vocab.join(canon, "entity_id")
         .filter(F.col("entity_id") == F.col("canonical_id"))
         .select("canonical_id", F.col("canonical_name").alias("name"), "entity_type")
     )
 
-    ee = (
+
+def materialize(raw_triples: DataFrame, ordered: DataFrame, entity_map: DataFrame,
+                vocab: DataFrame, salt_buckets: int = 16):
+    """raw_triples_view output → (triples, nodes, edges).
+
+    Edge timestamps ride along from S2 (schemas.EXTRACTED carries ``ts``), so
+    ``ordered`` is unused, as in oracle.materialize; it stays in the
+    signature because callers pass it positionally."""
+    smap = surface_map_df(entity_map)
+    t = _resolve(raw_triples, smap, "subj")
+    t = _resolve(t, smap, "obj")
+    triples = t.select("subj", "pred", "obj", "conv_id", "turn_idx")
+    nodes = canonical_nodes(vocab, entity_map)
+
+    edges = (
         t.filter(F.col("subj").startswith("ent:") & F.col("obj").startswith("ent:"))
         .select(
             F.expr("cast(substring(subj, 5) as long)").alias("src"),
             F.expr("cast(substring(obj, 5) as long)").alias("dst"),
-            "pred", "conv_id", "turn_idx",
-            *(["ts"] if "ts" in t.columns else []),
+            "pred", "conv_id", "ts",
         )
     )
-    if "ts" in t.columns:
-        # timestamp rode along from S2 (schemas.EXTRACTED) — no corpus join
-        edges = ee.select("src", "dst", "pred", "conv_id", "ts")
-    else:
-        edges = ee.join(
-            ordered.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"], "left"
-        ).select("src", "dst", "pred", "conv_id", "ts")
     # salted repartition on entity key: hot src values spread over
     # salt_buckets writer partitions (salt is a content hash → deterministic).
     # To be precise about what this buys: it is a WRITER SPREAD — it defuses

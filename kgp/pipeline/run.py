@@ -13,10 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
-from .cc import connected_components
 from .exec import collect_surface_rows
 from .extract import extract, mentions_view, raw_triples_view
-from .link import entity_map_from_edges, link_candidate_edges
+from .link import link_entities
 from .materialize import materialize, unmatched_surfaces
 from .order import order_turns, validation_errors
 
@@ -29,7 +28,6 @@ class InjectedFailure(RuntimeError):
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
                  out_root: str, input_fingerprint: str, *,
-                 surface_rows: list[tuple[str, int, str]] | None = None,
                  fail_after: str | None = None, force: bool = False) -> dict:
     """Run (or resume) S1..S5; returns {'io': TableIO, 'recomputed': [...],
     '<table>': DataFrame for each committed table}."""
@@ -51,13 +49,9 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
     # vocabulary-sized driver collect for data it never uses
     extracted, snap2 = stage(
         "extracted", f"{input_fingerprint}/{snap1}",
-        lambda: extract(ordered, surface_rows if surface_rows is not None
-                        else collect_surface_rows(vocab))
+        lambda: extract(ordered, collect_surface_rows(vocab)),
     )
-    emap, snap3 = stage(
-        "entity_map", input_fingerprint,
-        lambda: entity_map_from_edges(vocab, connected_components(link_candidate_edges(vocab))),
-    )
+    emap, snap3 = stage("entity_map", input_fingerprint, lambda: link_entities(vocab))
 
     raw_triples = raw_triples_view(extracted)
     fp_mat = f"{input_fingerprint}/{snap2}/{snap3}"

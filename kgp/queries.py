@@ -478,36 +478,27 @@ def _kgp_triples(spark, sf_dir):
 
 def _kgp_nodes_canonical(spark, sf_dir):
     """S5 nodes surface over the persisted vocab: one row per canonical
-    entity (pipeline.materialize's nodes output — vocab ⋈ canon WHERE
+    entity (pipeline.materialize.canonical_nodes — vocab ⋈ canon WHERE
     entity_id = canonical_id), hash-checked against the transcript twin's
     linking/CC chain (local-oracle: past the driver window)."""
     from .fixtures import load_vocab_pd
-    from .pipeline.cc import connected_components
-    from .pipeline.link import entity_map_from_edges, link_candidate_edges
+    from .pipeline.link import link_entities
+    from .pipeline.materialize import canonical_nodes
 
     vocab = spark.createDataFrame(load_vocab_pd())
-    emap = entity_map_from_edges(
-        vocab, connected_components(link_candidate_edges(vocab)))
-    canon = emap.select("entity_id", "canonical_id").distinct()
-    return (
-        vocab.join(canon, "entity_id")
-        .filter(F.col("entity_id") == F.col("canonical_id"))
-        .select("canonical_id", F.col("canonical_name").alias("name"),
-                "entity_type")
-    )
+    return canonical_nodes(vocab, link_entities(vocab))
 
 
 def _kgp_entity_map(spark, sf_dir):
     """S3+S4: blocked linking + large-star/small-star connected components."""
-    from .pipeline.cc import connected_components
-    from .pipeline.link import entity_map_from_edges, link_candidate_edges
+    from .pipeline.link import link_entities
 
     from . import synth
 
     # vocab only — generating even a 1-conv transcript corpus builds
     # surface tables and two broadcasts that linking never touches
     vocab = spark.createDataFrame(synth.gen_entity_vocab(120))
-    return entity_map_from_edges(vocab, connected_components(link_candidate_edges(vocab)))
+    return link_entities(vocab)
 
 
 def _kgp_edges(spark, sf_dir):
@@ -538,7 +529,8 @@ def _kgp_edges(spark, sf_dir):
 # outright:
 #   - ann_lsh_topk            ⊂ ann_batch_topk (+ ann_recall tracks quality)
 #   - dedup_ngram_jaccard_pairs ⊂ its df-capped twin (same SQL, same engine)
-#   - kgp_triples_joinpath    == kgp_triples bit-for-bit (pytest-asserted)
+#   - kgp_triples_joinpath    its join-based S2 extractor was removed
+#                               (kgp_triples gates the one S2 path)
 # and same-granularity ops were merged into single gated rows:
 #   - text_doc_profile  = quality_scores ⋈ lang_id
 #   - mm_meta           = payload_meta + resize planning

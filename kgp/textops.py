@@ -29,8 +29,8 @@ from typing import NamedTuple
 # Sentence segmentation (T1)
 # ---------------------------------------------------------------------------
 
-# ASCII whitespace class, not \s: the JVM twin (pipeline.extract_join uses
-# Java \s == this exact set) and the DuckDB twins ([\s\v]) must split the
+# ASCII whitespace class, not \s: the DuckDB twins (ops.transcript_twin
+# splits on the RE2 class [ \t\n\r\f\v], this exact set) must split the
 # same places; Python \s would additionally split on NBSP etc.
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])[ \t\n\r\f\v]+")
 _ASCII_WS = " \t\n\r\f\v"
@@ -76,8 +76,8 @@ def _split_fast_path_ok(t: str) -> bool:
 
 
 def ascii_split(s: str) -> list[str]:
-    """Non-empty tokens split on the 6-char ASCII whitespace class (== the
-    JVM twin's Java \\s and the DuckDB twins' [\\s\\v]).  Fast path: for
+    """Non-empty tokens split on the 6-char ASCII whitespace class (== Java
+    \\s in the JVM-side twins and the DuckDB twins' [\\s\\v]).  Fast path: for
     ASCII text without \\x1c-\\x1f, plain str.split() produces the identical
     token list at C speed — the regex only runs on the rare rest (property
     test asserts equivalence on adversarial inputs)."""
@@ -210,8 +210,8 @@ class GazetteerMatcher:
         self._max_toks = max_toks
 
     def find(self, sentence: str) -> list[Mention]:
-        # ASCII split (JVM-twin parity: pipeline.extract_join tokenizes
-        # sentences with Java \s, which never matches Unicode whitespace)
+        # ASCII split (DuckDB-twin parity: ops.transcript_twin tokenizes
+        # on [ \t\n\r\f\v], which never matches Unicode whitespace)
         raw = ascii_split(sentence)
         toks = [clean_token(t) for t in raw]
         n = len(toks)

@@ -3,6 +3,8 @@
 - per-turn text equality under stable (conv_id, turn_idx, ts) ordering
 - mention-set equality
 - distinct-triple precision/recall >= 0.95 (observed: 1.0)
+- edge-case turns (whitespace-only, \x1f in the text) extract exactly as
+  the oracle does
 - entity_map / nodes exact equality
 - the in-memory build_graph path: edges + entity_map exact equality with
   both CC forms (driver union-find and the distributed loop)
@@ -49,6 +51,46 @@ def test_triple_precision_recall(small_run, small_oracle):
     precision, recall = inter / len(st), inter / len(ot)
     assert precision >= 0.95, f"precision {precision:.4f}"
     assert recall >= 0.95, f"recall {recall:.4f}"
+
+
+def test_extract_edge_turns_match_oracle(spark):
+    """Turns that are whitespace-only (they pass order.py's space-only gate
+    but yield zero sentences), with and without a tool, and a turn with
+    \x1f in its text: extract emits exactly the oracle's mentions and
+    triples, and an EXTRACTED row for every turn — including the uses_tool
+    triple of a sentence-less turn."""
+    from kgp import oracle, synth
+    from kgp.pipeline.extract import extract, mentions_view, raw_triples_view
+    from kgp.textops import GazetteerMatcher
+
+    vocab = synth.gen_entity_vocab(20)
+    surface_rows = synth.vocab_surface_rows(vocab)
+    ent = vocab["canonical_name"].iloc[0]
+    rows = [
+        ("c0", 0, "user", "\n", "sql", pd.Timestamp("2025-01-01")),       # ws-only + tool
+        ("c0", 1, "user", "\t \n", None, pd.Timestamp("2025-01-01 00:01")),  # ws-only, no tool
+        ("c0", 2, "user", f"a\x1fb. {ent} did things.", "web",
+         pd.Timestamp("2025-01-01 00:02")),                                # \x1f in text
+        ("c0", 3, "user", f"{ent} said hello.", None,
+         pd.Timestamp("2025-01-01 00:03")),
+    ]
+    ordered = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    extracted = extract(spark.createDataFrame(ordered), surface_rows)
+    o_mentions, o_triples = oracle.extract(ordered, GazetteerMatcher(surface_rows))
+
+    def rows_of(pdf, keys):
+        return sorted(map(tuple, pdf[keys].itertuples(index=False)))
+
+    keys = ["conv_id", "turn_idx", "sent_idx", "mention", "entity_type"]
+    got = rows_of(mentions_view(extracted).toPandas(), keys)
+    assert got == rows_of(o_mentions, keys) and got
+    keys = ["conv_id", "turn_idx", "subj", "pred", "obj", "ts"]
+    got = rows_of(raw_triples_view(extracted).toPandas(), keys)
+    assert got == rows_of(o_triples, keys) and got
+    # the sentence-less tool turn IS present with its uses_tool triple
+    got = {r["turn_idx"]: [tuple(t) for t in r["triples"]] for r in extracted.collect()}
+    assert 0 in got and ("conv:c0", "uses_tool", "tool:sql") in got[0]
+    assert 1 in got and got[1] == []
 
 
 def test_entity_map_exact(small_run, small_oracle):
