@@ -148,7 +148,7 @@ _PLANE_SEED = 20240816  # independent hash family from dedup's (by design)
 
 
 def lsh_bucket_ids(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", bands: int = 3) -> DataFrame:
+                   vec_col: str = "embedding", *, bands: int) -> DataFrame:
     """(id, bkey) rows: sign-bit bucket keys, ``bands`` keys per vector.
     Bucketing is single-sourced in ops.hyperlsh (cached planes, vectorized
     key build) — shared with dedup.cosine_near_dup_pairs modulo seed."""
@@ -179,7 +179,7 @@ def build_lsh_index(df: DataFrame, out_dir: str, id_col: str = "vec_id",
     create_faiss_index.py:43-68: train/add/write_index) — queries then pay
     a bucket-table scan instead of recomputing every corpus bucket key.
     Partitioned by band so a query probing one band prunes the others."""
-    buckets = lsh_bucket_ids(df, id_col, vec_col, bands).withColumn(
+    buckets = lsh_bucket_ids(df, id_col, vec_col, bands=bands).withColumn(
         "band", F.split(F.col("bkey"), ":").getItem(0))
     buckets.write.mode("overwrite").partitionBy("band").parquet(f"{out_dir}/buckets")
     # the index is only probeable with the SAME banding: record it, so a
@@ -252,7 +252,7 @@ def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     """
     if bands is None and index is None:
         bands = 4
-    corpus_buckets = index if index is not None else lsh_bucket_ids(corpus, id_col, vec_col, bands)
+    corpus_buckets = index if index is not None else lsh_bucket_ids(corpus, id_col, vec_col, bands=bands)
     if index is not None:
         # probe with the INDEX's banding — a caller-supplied bands that
         # disagrees with the build would make every bkey equijoin miss.
@@ -274,7 +274,7 @@ def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                 "returned by load_lsh_index untransformed, or pass the "
                 "bands the bucket table was built with (mismatched bands "
                 "silently return zero candidates)")
-    q_buckets = lsh_bucket_ids(queries, id_col, vec_col, bands).withColumnRenamed("id", "qid")
+    q_buckets = lsh_bucket_ids(queries, id_col, vec_col, bands=bands).withColumnRenamed("id", "qid")
     cand = (
         q_buckets.join(corpus_buckets, "bkey")
         .filter(F.col("qid") != F.col("id"))
@@ -664,24 +664,3 @@ FROM (
          (SELECT COUNT(*) FROM ex e JOIN ivf_top a
             ON e.qid = a.qid AND e.vec_id = a.vec_id))
 """
-
-
-def ann_topk_lsh(df: DataFrame, query_id: int, k: int = 10,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k: only vectors sharing >=1 LSH band with the query are
-    scored exactly.  Approximate (recall < 1 by design) — rows-only check."""
-    buckets = lsh_bucket_ids(df, id_col, vec_col)
-    q_buckets = buckets.filter(F.col("id") == query_id).select("bkey")
-    cand_ids = (
-        buckets.join(F.broadcast(q_buckets), "bkey")
-        .filter(F.col("id") != query_id)
-        .select(F.col("id").alias(id_col)).distinct()
-    )
-    cand = df.join(cand_ids, id_col)
-    q = df.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(F.col(id_col),
-                _cos(vec_col, "qv").alias("score"))
-        .orderBy(F.desc("score"), id_col).limit(k)
-    )

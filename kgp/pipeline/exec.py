@@ -43,7 +43,6 @@ def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
 
 
 def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
-                surface_rows: list[tuple[str, int, str]] | None = None,
                 overlap: bool = True, cc_threshold: int | None = None) -> dict:
     """S1..S5 in memory; returns dict with ordered/extracted/entity_map/
     triples/nodes/edges DataFrames (edges/triples not yet materialized).
@@ -56,16 +55,13 @@ def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
     large-star/small-star loop — the scaling bench uses this to exercise
     the at-scale CC path).
     """
-    if surface_rows is None:
-        surface_rows = collect_surface_rows(vocab)
-
     def linking_branch() -> DataFrame:
         thr = SMALL_GRAPH_EDGES if cc_threshold is None else cc_threshold
         return link_entities(vocab, small_graph_threshold=thr)
 
     def extraction_branch() -> tuple[DataFrame, DataFrame]:
         ordered = order_turns(transcripts)
-        return ordered, extract(ordered, surface_rows).localCheckpoint(eager=True)
+        return ordered, extract(ordered, collect_surface_rows(vocab)).localCheckpoint(eager=True)
 
     if overlap:
         with ThreadPoolExecutor(max_workers=1) as pool:

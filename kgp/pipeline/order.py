@@ -32,7 +32,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from ..textops import MIN_DUP_GROUP, dup_key
+from ..textops import MIN_DUP_GROUP
 
 
 @F.pandas_udf(T.StringType())
@@ -62,6 +62,20 @@ def validation_errors(df: DataFrame) -> DataFrame:
     )
 
 
+def valid_turns(df: DataFrame) -> DataFrame:
+    """Rows that can take part in ordering and extraction: non-null
+    conv_id/turn_idx and non-blank trimmed text.  Shared by order_turns
+    and the streaming operators — a file source's schema nullability is
+    advisory only, and one null turn_idx would otherwise kill a whole
+    streaming query inside the extractor's int() coercion instead of being
+    filtered.  (The batch path additionally ledgers the null-key rows via
+    validation_errors; a firehose deployment gets the ledger from the
+    periodic batch run over the landed table.)"""
+    return df.filter(
+        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+        & (F.length(F.trim(F.col("text"))) > 0))
+
+
 def order_turns(df: DataFrame) -> DataFrame:
     """Ordered, deduplicated, boilerplate-free turns (S1; see the module
     docstring for the single-shuffle plan)."""
@@ -69,9 +83,7 @@ def order_turns(df: DataFrame) -> DataFrame:
 
     # invalid ordering keys are excluded here and surfaced via
     # validation_errors -> the errors table (D4), never silently kept
-    df = df.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
-    df = df.filter(F.length(F.trim(F.col("text"))) > 0)
-    df = df.repartition(parts, "conv_id")
+    df = valid_turns(df).repartition(parts, "conv_id")
 
     # exact within-conversation dedup, keep earliest turn — window is
     # clustered by a superset of the partitioning key: no extra exchange.

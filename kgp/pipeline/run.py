@@ -19,8 +19,6 @@ from .link import link_entities
 from .materialize import materialize, unmatched_surfaces
 from .order import order_turns, validation_errors
 
-STAGES = ("ordered", "extracted", "entity_map", "triples", "nodes", "edges", "errors")
-
 
 class InjectedFailure(RuntimeError):
     pass

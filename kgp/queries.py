@@ -508,12 +508,9 @@ def _kgp_edges(spark, sf_dir):
     recursive-CTE CC twin)."""
     from .fixtures import load_transcripts, load_vocab_pd
     from .pipeline.exec import build_graph
-    from .synth import vocab_surface_rows
 
-    vocab_pd = load_vocab_pd()
-    vocab = spark.createDataFrame(vocab_pd)
-    return build_graph(spark, load_transcripts(spark), vocab,
-                       vocab_surface_rows(vocab_pd))["edges"]
+    vocab = spark.createDataFrame(load_vocab_pd())
+    return build_graph(spark, load_transcripts(spark), vocab)["edges"]
 
 
 # ---------------------------------------------------------------------------
@@ -527,7 +524,8 @@ def _kgp_edges(spark, sf_dir):
 # window.  Every entry past 50 is still verified locally
 # (tools/check_parity.py) and by pytest; redundant entries were retired
 # outright:
-#   - ann_lsh_topk            ⊂ ann_batch_topk (+ ann_recall tracks quality)
+#   - ann_lsh_topk            ⊂ ann_batch_topk (+ ann_recall tracks quality);
+#                               its one-query function was removed too
 #   - dedup_ngram_jaccard_pairs ⊂ its df-capped twin (same SQL, same engine)
 #   - kgp_triples_joinpath    its join-based S2 extractor was removed
 #                               (kgp_triples gates the one S2 path)

@@ -655,19 +655,3 @@ def parse_qa_pairs(text: str, expected_fallback_count: int = 5) -> list[tuple[st
         if len(questions) == len(answers):
             return list(zip(questions, answers))
     return []
-
-
-# ---------------------------------------------------------------------------
-# Token counting / quality heuristics (T6 + training-data ops)
-# ---------------------------------------------------------------------------
-
-_WORD_RE = re.compile(r"\w+")
-
-
-def count_tokens(text: str) -> int:
-    """Whitespace token count (reference notebooks/count_tokens.ipynb cell-1)."""
-    return len(text.split()) if text else 0
-
-
-def count_words(text: str) -> int:
-    return len(_WORD_RE.findall(text)) if text else 0

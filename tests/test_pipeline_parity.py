@@ -6,6 +6,8 @@
 - edge-case turns (whitespace-only, \x1f in the text) extract exactly as
   the oracle does
 - entity_map / nodes exact equality
+- every committed table's (name, type) layout matches its kgp.schemas
+  declaration
 - the in-memory build_graph path: edges + entity_map exact equality with
   both CC forms (driver union-find and the distributed loop)
 """
@@ -120,14 +122,32 @@ def test_metrics_lineage_rows(small_run):
     assert m["snapshot_id"].notna().all()
 
 
+def test_committed_schemas_match_declarations(small_run):
+    """Every run_pipeline output has the (name, type) layout its kgp.schemas
+    declaration promises; nullability is not compared."""
+    from kgp import schemas
+
+    declared = {
+        "ordered": schemas.TRANSCRIPTS, "extracted": schemas.EXTRACTED,
+        "mentions": schemas.MENTIONS, "raw_triples": schemas.RAW_TRIPLES,
+        "entity_map": schemas.ENTITY_MAP, "triples": schemas.TRIPLES,
+        "nodes": schemas.NODES, "edges": schemas.EDGES,
+        "errors": schemas.ERRORS, "metrics": schemas.METRICS,
+    }
+
+    def layout(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    for name, schema in declared.items():
+        assert layout(small_run[name].schema) == layout(schema), name
+
+
 @pytest.mark.parametrize("cc_threshold", [None, 0], ids=["union_find", "distributed_cc"])
-def test_build_graph_matches_oracle(spark, small_spark_inputs, small_vocab, small_oracle,
-                                    cc_threshold):
+def test_build_graph_matches_oracle(spark, small_spark_inputs, small_oracle, cc_threshold):
     from kgp.pipeline.exec import build_graph
-    from kgp.synth import vocab_surface_rows
 
     t, v = small_spark_inputs
-    g = build_graph(spark, t, v, vocab_surface_rows(small_vocab), cc_threshold=cc_threshold)
+    g = build_graph(spark, t, v, cc_threshold=cc_threshold)
     keys = ["conv_id", "src", "dst", "pred", "ts"]
     sp = _pdf(g["edges"], keys)[keys]
     op = small_oracle["edges"][keys].sort_values(keys).reset_index(drop=True)

@@ -71,13 +71,12 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     with the app, so no cross-run storage leak (ContextCleaner only frees
     blocks after a driver-JVM GC, which a quiet 1g driver heap may never
     trigger — observed as executors wedged at their storage limit)."""
-    from kgp.pipeline.exec import build_graph, collect_surface_rows
+    from kgp.pipeline.exec import build_graph
     from tools.cluster import executor_session
 
     spark = executor_session(n_exec, app_name=f"kgp-scale-{n_exec}exec")
     transcripts = spark.read.parquet(f"{INPUT_DIR}/transcripts")
     vocab = spark.read.parquet(f"{INPUT_DIR}/vocab")
-    surface_rows = collect_surface_rows(vocab)
     n_turns = transcripts.count()
 
     t0 = time.monotonic()
@@ -88,7 +87,7 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     # force_cc=0-threshold runs the distributed large-star/small-star loop
     # even though the link graph is below the driver-union-find cutoff —
     # the scaling evidence for the at-scale CC path (VERDICT r2 ask)
-    out = build_graph(spark, transcripts, vocab, surface_rows, overlap=False,
+    out = build_graph(spark, transcripts, vocab, overlap=False,
                       cc_threshold=0 if force_cc else None)
     out["edges"].write.format("noop").mode("overwrite").save()
     dt = time.monotonic() - t0
